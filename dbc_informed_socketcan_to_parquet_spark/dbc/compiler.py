@@ -1,13 +1,28 @@
-"""DBC → Column-expression compiler (the engine's "physical decode codegen").
+"""DBC → SQL-expression compiler (the engine's "physical decode codegen").
 
 Replaces the reference's per-frame interpretive decode loop
-(/root/reference/src/decoder.cpp:76-129) with driver-side expression
-generation: one Spark Column per signal, all derived from a single shared
-payload-word column, so a 100-signal DBC decodes in one WholeStageCodegen
-stage with zero Python in the data path.
+(reference/src/decoder.cpp:76-129) with driver-side generation of
+Spark SQL expression *text*: one expression string per signal, covering
+bit extraction, sign extension, float32 reinterpret, factor/offset, bool,
+mux/message gating and the final cast.
+
+Building the plan is string work on the driver.  A ``Column``-algebra
+build pays several py4j round trips per ``F.*`` call — hundreds per signal
+once the payload word is rebuilt inside every one — while the text
+compiles and reaches Spark in a constant number of calls, however wide
+the DBC.
+
+``decode_wide`` projects the big- and little-endian payload words once per
+frame as their own columns, then applies every signal as one
+``selectExpr`` over them.  Catalyst's ``CollapseProject`` does not inline a
+costly expression that several consumers reference, so the words stay
+computed once per frame and the decode remains one WholeStageCodegen stage
+with zero Python in the data path.  ``phys_expr``/``enum_expr`` return the
+same text as a ``Column`` with the word expression written inline, for
+callers that place single signals in their own projections.
 
 Scale notes (100 TB):
-- The known-id filter (T6) is an ``isin`` over a driver-side literal list —
+- The known-id filter (T6) is an ``IN`` over a driver-side literal list —
   pushed into the parquet/text scan by Catalyst; for very large dictionaries
   it degrades gracefully to a broadcast left-semi join (both provided).
 - Wide decode = N pure projections; no shuffle is introduced until the
@@ -19,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dbc_informed_socketcan_to_parquet_spark.dbc.spec import BOOL, DbcSpec, MessageSpec, SignalSpec
+from dbc_informed_socketcan_to_parquet_spark.dbc.spec import BOOL, FLOAT32, FLOAT64, DbcSpec, MessageSpec, SignalSpec
 from dbc_informed_socketcan_to_parquet_spark.functions.bitfield import (
     extract_bits,
     ieee754_float32,
@@ -27,7 +42,37 @@ from dbc_informed_socketcan_to_parquet_spark.functions.bitfield import (
     payload_be_u64,
     payload_le_u64,
     sign_extend,
+    sql_double,
+    to_double,
 )
+
+#: Per-frame payload-word columns that ``decode_wide`` projects once.
+_BE_WORD, _LE_WORD = "__dbc_word_be", "__dbc_word_le"
+
+
+def _quote(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _select_sql(df: DataFrame, exprs: list[str]) -> DataFrame:
+    """``df.selectExpr(*exprs)`` in a constant number of py4j round trips.
+
+    PySpark ships a Python list to the JVM one element per round trip; the
+    expressions go over as one joined string instead, split JVM-side into
+    the ``String[]`` that the varargs ``Dataset.selectExpr`` takes.  Spark
+    Connect has no ``_jdf`` and batches the list itself.
+    """
+    if not hasattr(df, "_jdf"):
+        return df.selectExpr(*exprs)
+    sep = "\u0001"
+    jvm = df.sparkSession._jvm
+    arr = jvm.java.util.regex.Pattern.compile(sep).split(sep.join(exprs))
+    return type(df)(df._jdf.selectExpr(arr), df.sparkSession)
 
 
 class DecodeCompiler:
@@ -42,80 +87,88 @@ class DecodeCompiler:
         self.can_id_col = can_id_col
         self.data_col = data_col
 
-    # -- signal-level ------------------------------------------------------
+    def _inline_words(self) -> dict[str, str]:
+        be = payload_be_u64(_quote(self.data_col))
+        return {"big": be, "little": payload_le_u64(be)}
 
-    def raw_expr(self, sig: SignalSpec) -> Column:
-        """Unsigned raw bit-field of one signal from the payload word."""
-        data = F.col(self.data_col)
+    # -- signal-level (SQL text) -------------------------------------------
+
+    def raw_sql(self, sig: SignalSpec, words: dict[str, str]) -> str:
+        """Unsigned raw bit-field of one signal from its payload word;
+        ``words`` maps byte order to the word's SQL expression."""
         if sig.byte_order == "little":
-            word = payload_le_u64(data)
             lsb = sig.start_bit
         else:
-            word = payload_be_u64(data)
             lsb = motorola_lsb(sig.start_bit, sig.bit_length)
-        return extract_bits(word, lsb, sig.bit_length)
+        return extract_bits(words[sig.byte_order], lsb, sig.bit_length)
 
-    def phys_expr(self, sig: SignalSpec, msg: MessageSpec | None = None) -> Column:
-        """Physical value: raw → (sign extend) → reinterpret/scale → cast.
-
-        Mirrors dbcppp RawToPhys semantics (phys = raw * factor + offset,
-        /root/reference/src/decoder.cpp:103-115) and the flt32 reinterpret
-        convention (decoder.cpp:28-37); typing per SignalSpec.type_tag.
-
-        The message gate is applied by *arithmetic masking*
-        (``value + CASE WHEN gate THEN 0 END``), not ``CASE WHEN gate THEN
-        value END``: the value subtree stays UNCONDITIONAL, so Catalyst's
-        codegen subexpression elimination shares the payload-word assembly
-        (and the candump parse chain feeding it) across all signals of a
-        message — measured ~2.3× on a 5-signal decode, and the win grows
-        linearly with DBC width.  Wrong-message rows compute a wasted word
-        (cheap integer ops) and null out via ``x + NULL = NULL``.
-        """
-        raw = self.raw_expr(sig)
+    def phys_sql(self, sig: SignalSpec, msg: MessageSpec | None, words: dict[str, str]) -> str:
+        """Physical value as SQL text — see :meth:`phys_expr`."""
+        raw = self.raw_sql(sig, words)
         if sig.is_float32:
             num = ieee754_float32(raw)
         else:
-            signed = sign_extend(raw, sig.bit_length) if sig.is_signed else raw
-            if sig.type_tag == BOOL or (sig.factor == 1.0 and sig.offset == 0.0):
-                num = signed
-            else:
-                num = signed.cast("double") * F.lit(float(sig.factor)) + F.lit(float(sig.offset))
+            num = sign_extend(raw, sig.bit_length) if sig.is_signed else raw
+            tag = sig.type_tag
+            if tag in (FLOAT32, FLOAT64) or (tag != BOOL and (sig.factor != 1.0 or sig.offset != 0.0)):
+                as_double = to_double(num, sig.bit_length, sig.is_signed)
+                num = f"{as_double} * {sql_double(sig.factor)} + {sql_double(sig.offset)}"
         # Gate on owning message id — a frame only carries its own signals
         # (scatter loop, /root/reference/src/decoder.cpp:92-116).
         if msg is not None:
-            gate = F.col(self.can_id_col) == F.lit(msg.can_id)
+            gate = f"{_quote(self.can_id_col)} = {msg.can_id}"
             # Multiplexed signal: additionally require the mux switch value
             # (T5, /root/reference/src/decoder.cpp:85-88).
             if sig.mux_switch_value is not None and msg.mux_switch is not None:
-                sw = self.raw_expr(msg.mux_switch)
-                gate = gate & (sw == F.lit(sig.mux_switch_value))
-            num = num + F.when(gate, F.lit(0))
-        value = (num != 0) if sig.type_tag == BOOL else num
-        return value.cast(sig.spark_type)
+                gate += f" AND {self.raw_sql(msg.mux_switch, words)} = {sig.mux_switch_value}"
+            num = f"({num} + CASE WHEN {gate} THEN 0 END)"
+        value = f"({num} != 0)" if sig.type_tag == BOOL else num
+        return f"CAST({value} AS {sig.spark_type.simpleString()})"
+
+    # -- signal-level (Column) ---------------------------------------------
+
+    def phys_expr(self, sig: SignalSpec, msg: MessageSpec | None = None) -> Column:
+        """Physical value: raw → (sign extend) → reinterpret/scale → cast,
+        as one SQL expression over an inline payload word.
+
+        Mirrors dbcppp RawToPhys semantics (phys = raw * factor + offset,
+        reference/src/decoder.cpp:103-115) and the flt32 reinterpret
+        convention (decoder.cpp:28-37); typing per SignalSpec.type_tag.
+        The text is the one :meth:`decode_wide` applies over its projected
+        word columns, so both paths decode identically.
+
+        The message gate is applied by *arithmetic masking*
+        (``value + CASE WHEN gate THEN 0 END``), not ``CASE WHEN gate THEN
+        value END``: the value subtree stays UNCONDITIONAL, so when several
+        ``phys_expr`` columns share one projection, Catalyst's codegen
+        subexpression elimination shares their inline payload-word assembly.
+        Wrong-message rows compute a wasted value (cheap integer ops) and
+        null out via ``x + NULL = NULL``.
+        """
+        return F.expr(self.phys_sql(sig, msg, self._inline_words()))
 
     def enum_expr(self, sig: SignalSpec, msg: MessageSpec) -> Column:
         """VAL_ value-table rendering: raw value → label string (falls back
         to the number as text for unmapped values).  A driver-side literal
         map compiled into element_at on a map literal — no join, no UDF."""
         table = self.spec.value_tables.get((msg.can_id, sig.name))
-        raw = self.raw_expr(sig)
+        raw = self.raw_sql(sig, self._inline_words())
         signed = sign_extend(raw, sig.bit_length) if sig.is_signed else raw
+        as_text = f"CAST({signed} AS STRING)"
         if not table:
-            return signed.cast("string")
-        mapping = F.create_map(
-            *[c for k, v in sorted(table.items()) for c in (F.lit(int(k)), F.lit(v))]
-        )
-        labeled = F.coalesce(F.element_at(mapping, signed.cast("int")), signed.cast("string"))
-        gate = F.col(self.can_id_col) == F.lit(msg.can_id)
-        return F.when(gate, labeled)
+            return F.expr(as_text)
+        mapping = ", ".join(f"{int(k)}, {_sql_string(v)}" for k, v in sorted(table.items()))
+        labeled = f"coalesce(element_at(map({mapping}), CAST({signed} AS INT)), {as_text})"
+        return F.expr(f"CASE WHEN {_quote(self.can_id_col)} = {msg.can_id} THEN {labeled} END")
 
     # -- frame-level -------------------------------------------------------
 
     def known_id_filter(self, frames: DataFrame) -> DataFrame:
         """T6: drop frames whose id is not in the dictionary
-        (/root/reference/src/decoder.cpp:77-79).  Literal ``isin`` —
+        (reference/src/decoder.cpp:77-79).  Literal ``IN`` —
         Catalyst pushes it to the scan."""
-        return frames.filter(F.col(self.can_id_col).isin(self.spec.known_ids()))
+        ids = ", ".join(str(i) for i in self.spec.known_ids())
+        return frames.filter(f"{_quote(self.can_id_col)} IN ({ids})" if ids else "false")
 
     def known_id_semi_join(self, frames: DataFrame, spark) -> DataFrame:
         """T6 as an explicit broadcast left-semi join against the dictionary
@@ -137,16 +190,21 @@ class DecodeCompiler:
         This is the long→wide pivot (A3) in its shuffle-free form: because
         the signal→message mapping is known at compile time, the "pivot" is
         just N conditional projections — no groupBy, no extra scan.
+        The payload words are projected once per frame as columns (an
+        unused one is pruned by Catalyst); every signal then reads them.
         Downstream, the bucket downsample (operators/bucket.py) collapses
         rows per time bucket.
         """
         if filter_known:
             frames = self.known_id_filter(frames)
-        cols: list[Column] = [F.col(c) for c in keep_cols]
-        cols.append((F.col("ts") * 1000.0).alias(time_col))
+        words = frames.selectExpr("*", f"{payload_be_u64(_quote(self.data_col))} AS {_BE_WORD}")
+        words = words.selectExpr("*", f"{payload_le_u64(_BE_WORD)} AS {_LE_WORD}")
+        refs = {"big": _BE_WORD, "little": _LE_WORD}
+        exprs = [_quote(c) for c in keep_cols]
+        exprs.append(f"`ts` * 1000.0D AS {_quote(time_col)}")
         for msg, sig in self.spec.all_signals():
-            cols.append(self.phys_expr(sig, msg).alias(sig.column_name))
-        return frames.select(*cols)
+            exprs.append(f"{self.phys_sql(sig, msg, refs)} AS {_quote(sig.column_name)}")
+        return _select_sql(words, exprs)
 
     def signal_spec_df(self, spark) -> DataFrame:
         """The dictionary as a small DataFrame (broadcastable dimension) —

@@ -4,7 +4,7 @@ The reference derives its whole output schema from a Vector DBC file at
 startup (``/root/reference/src/decoder.cpp:3-74``) — schema-on-read with an
 external data dictionary, never inferred from data.  We model the dictionary
 as plain dataclasses; the compiler (``dbc/compiler.py``) turns it into Spark
-Column expressions and a StructType.
+SQL expressions and a StructType.
 
 Type-inference rules follow the reference's *intent* (SURVEY.md §1.2 /
 §7.4): the reference's integer branch (``/root/reference/src/decoder.cpp:45``)
@@ -67,12 +67,30 @@ class SignalSpec:
         if abs(self.factor - 1.0) < 1e-4 and float(self.offset).is_integer():
             # intent of /root/reference/src/decoder.cpp:45-55 (branch is dead
             # in the reference; INT96 likewise dead — we cap at INT64).
-            # Unsigned fields need one more bit than signed for the same
-            # length: a u32 raw ≥ 2^31 would wrap in an int32 column.
-            if self.bit_length > 32 or (self.bit_length == 32 and not self.is_signed):
-                return INT64
-            return INT32
+            # The column is the narrowest integer type that holds every
+            # physical value of the field: a u32 raw ≥ 2^31 would wrap in an
+            # int32 column, an offset can push an s32 past it, and no integer
+            # column holds a u64 ≥ 2^63 (those fall back to FLOAT64).
+            lo, hi = self.physical_range
+            for tag, bits in ((INT32, 32), (INT64, 64)):
+                if -(1 << (bits - 1)) <= lo and hi <= (1 << (bits - 1)) - 1:
+                    return tag
+            return FLOAT64
         return FLOAT64 if self.bit_length >= 32 else FLOAT32
+
+    @property
+    def physical_range(self) -> tuple[float, float]:
+        """Smallest and largest physical value the decode can produce (as
+        the decode computes it: exact for unscaled fields, in double
+        arithmetic otherwise)."""
+        if self.is_signed:
+            lo, hi = -(1 << (self.bit_length - 1)), (1 << (self.bit_length - 1)) - 1
+        else:
+            lo, hi = 0, (1 << self.bit_length) - 1
+        if self.factor == 1.0 and self.offset == 0.0:
+            return lo, hi
+        ends = (float(lo) * self.factor + self.offset, float(hi) * self.factor + self.offset)
+        return min(ends), max(ends)
 
     @property
     def spark_type(self) -> T.DataType:

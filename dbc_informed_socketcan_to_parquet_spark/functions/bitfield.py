@@ -1,27 +1,44 @@
-"""Bit-field extraction and IEEE-754 reinterpret as pure Column algebra.
+"""Bit-field extraction and IEEE-754 reinterpret as Spark SQL expression text.
 
 The reference extracts each signal's bit-field from the 8-byte CAN payload
 in C (delegated to dbcppp ``Decode``, /root/reference/src/decoder.cpp:76-129)
 and hand-rolls a float32 reinterpret (/root/reference/src/custom_types.cpp:42-110).
-Here both are *driver-side generated expressions* over built-in
-``pyspark.sql.functions`` — they run JVM-side inside WholeStageCodegen, no
-Python in the hot path.  A pandas-UDF ``struct.unpack`` oracle lives in
-``tests/`` only.
+Here both are *driver-side generated SQL expressions* over Spark built-ins —
+they run JVM-side inside WholeStageCodegen, no Python in the hot path.
+
+Every helper takes and returns SQL expression text, not a ``Column``:
+composing text costs no JVM round trip, so a whole DBC compiles to strings
+on the driver and reaches Spark in a handful of calls
+(``dbc/compiler.py``).  Each returned expression is parenthesized, so it
+composes under any operator.
 
 Representation choice: the 8-byte payload is materialised once per frame as
 a signed 64-bit long whose *bit pattern* equals the unsigned payload word
 (Java long arithmetic wraps, so ``b7 << 56`` with the top bit set is simply
 the right bit pattern).  All per-signal extraction is then shifts + masks on
-that one column — Catalyst CSE keeps it single-evaluation across signals.
+that one word.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import math
 
 
-def payload_be_u64(data: Column) -> Column:
+def sql_double(x: float) -> str:
+    """A DOUBLE literal that round-trips ``x`` exactly.
+
+    Spark SQL reads an unsuffixed ``0.05`` as DECIMAL(2,2), which would
+    switch the scaling to decimal arithmetic; ``repr`` is the shortest
+    string that parses back to the same double, and the ``D`` suffix
+    keeps it a double.
+    """
+    x = float(x)
+    if math.isfinite(x):
+        return f"({x!r}D)"
+    return f"CAST('{x}' AS DOUBLE)"
+
+
+def payload_be_u64(data: str) -> str:
     """Big-endian (Motorola) payload word: byte 0 is the most significant.
 
     Two 32-bit ``conv`` calls on the zero-padded hex rendering (each fits a
@@ -29,47 +46,48 @@ def payload_be_u64(data: Column) -> Column:
     pattern of the unsigned word in a signed long.  Payloads shorter than
     8 bytes zero-pad on the right, matching the zeroed can_frame buffer.
     """
-    h = F.rpad(F.hex(data), 16, "0")
-    hi = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
-    return F.shiftleft(hi, 32).bitwiseOR(lo)
+    h = f"rpad(hex({data}), 16, '0')"
+    hi = f"CAST(conv(substring({h}, 1, 8), 16, 10) AS BIGINT)"
+    lo = f"CAST(conv(substring({h}, 9, 8), 16, 10) AS BIGINT)"
+    return f"(shiftleft({hi}, 32) | {lo})"
 
 
-def payload_le_u64(data: Column) -> Column:
+def payload_le_u64(be: str) -> str:
     """Little-endian (Intel) payload word: byte 0 is the least significant.
 
-    Byte-swap of the big-endian word — pure integer shifts/masks, all
-    JVM-side; Catalyst's subexpression elimination shares the underlying
-    conv pair across every signal of a message.
+    Byte-swap of the big-endian word ``be`` — integer shifts and masks only.
     """
-    be = payload_be_u64(data)
-    out = F.lit(0).cast("long")
-    for i in range(8):
-        byte_i = F.shiftrightunsigned(be, 8 * (7 - i)).bitwiseAND(F.lit(255))
-        out = out.bitwiseOR(F.shiftleft(byte_i, 8 * i))
-    return out
+    parts = [f"shiftleft(shiftrightunsigned({be}, {8 * (7 - i)}) & 255, {8 * i})" for i in range(8)]
+    return f"({' | '.join(parts)})"
 
 
-def extract_bits(word: Column, lsb: int, length: int) -> Column:
+def extract_bits(word: str, lsb: int, length: int) -> str:
     """Unsigned bit-field ``word[lsb + length - 1 : lsb]`` as a long.
 
     Uses ``shiftrightunsigned`` so the sign bit of the 64-bit carrier never
     leaks into the field; for ``length == 64`` the mask is the full word.
     """
-    shifted = F.shiftrightunsigned(word, lsb) if lsb else word
+    shifted = f"shiftrightunsigned({word}, {lsb})" if lsb else word
     if length >= 64:
-        return shifted
-    mask = (1 << length) - 1
-    return shifted.bitwiseAND(F.lit(mask))
+        return f"({shifted})"
+    return f"({shifted} & {(1 << length) - 1}L)"
 
 
-def sign_extend(raw: Column, length: int) -> Column:
-    """Two's-complement sign extension of an unsigned ``length``-bit field."""
+def sign_extend(raw: str, length: int) -> str:
+    """Two's-complement sign extension of an unsigned ``length``-bit field:
+    move its sign bit to bit 63, then shift back arithmetically."""
     if length >= 64:
         return raw
-    sign_bit = 1 << (length - 1)
-    full = 1 << length
-    return F.when(raw >= F.lit(sign_bit), raw - F.lit(full)).otherwise(raw)
+    return f"shiftright(shiftleft({raw}, {64 - length}), {64 - length})"
+
+
+def to_double(raw: str, length: int, signed: bool) -> str:
+    """DOUBLE value of a raw field.  An unsigned 64-bit field with its top
+    bit set sits in a negative long; it widens exactly (and rounds once)
+    through DECIMAL."""
+    if length >= 64 and not signed:
+        return f"CAST(pmod(CAST({raw} AS DECIMAL(20,0)), {1 << 64}BD) AS DOUBLE)"
+    return f"CAST({raw} AS DOUBLE)"
 
 
 def motorola_lsb(start_bit: int, length: int) -> int:
@@ -86,24 +104,20 @@ def motorola_lsb(start_bit: int, length: int) -> int:
     return msb_pos - (length - 1)
 
 
-def ieee754_float32(u32: Column) -> Column:
+def ieee754_float32(u32: str) -> str:
     """Reinterpret a 32-bit pattern (carried in a long) as IEEE-754 float32.
 
     Arithmetic decode — sign/exponent/mantissa split, with subnormal,
     ±Inf and NaN branches — mirroring the semantics of the reference's
     byte-level reinterpret (/root/reference/src/custom_types.cpp:87-110)
-    without any UDF.  Returns DoubleType (exact superset of float32 values);
-    callers cast to ``float`` for the column type.
+    without any UDF.  Returns DOUBLE (exact superset of float32 values);
+    callers cast to FLOAT for the column type.
     """
-    sign = F.when(F.shiftrightunsigned(u32, 31).bitwiseAND(F.lit(1)) == 1, F.lit(-1.0)).otherwise(F.lit(1.0))
-    exp = F.shiftrightunsigned(u32, 23).bitwiseAND(F.lit(0xFF))
-    man = u32.bitwiseAND(F.lit(0x7FFFFF))
-    frac = man.cast("double") / F.lit(float(1 << 23))
-    normal = sign * (F.lit(1.0) + frac) * F.pow(F.lit(2.0), exp.cast("double") - F.lit(127.0))
-    subnormal = sign * frac * F.lit(2.0 ** -126)
-    inf_or_nan = F.when(man == 0, sign * F.lit(float("inf"))).otherwise(F.lit(float("nan")))
-    return (
-        F.when(exp == 255, inf_or_nan)
-        .when(exp == 0, subnormal)
-        .otherwise(normal)
-    )
+    sign = f"CASE WHEN (shiftrightunsigned({u32}, 31) & 1) = 1 THEN (-1.0D) ELSE 1.0D END"
+    exp = f"(shiftrightunsigned({u32}, 23) & 255)"
+    man = f"({u32} & 8388607)"
+    frac = f"(CAST({man} AS DOUBLE) / {sql_double(1 << 23)})"
+    normal = f"({sign}) * (1.0D + {frac}) * pow(2.0D, CAST({exp} AS DOUBLE) - 127.0D)"
+    subnormal = f"({sign}) * {frac} * {sql_double(2.0 ** -126)}"
+    inf_or_nan = f"CASE WHEN {man} = 0 THEN ({sign}) * {sql_double(math.inf)} ELSE {sql_double(math.nan)} END"
+    return f"(CASE WHEN {exp} = 255 THEN {inf_or_nan} WHEN {exp} = 0 THEN {subnormal} ELSE {normal} END)"

@@ -328,7 +328,6 @@ def q_float32_reinterpret(spark: SparkSession, sf_dir: str) -> DataFrame:
     2155872255 == 0x807FFFFF, 1065353216 == 0x3F800000 (sign+mantissa
     keep-mask and the forced exponent).
     """
-    from dbc_informed_socketcan_to_parquet_spark.functions.bitfield import ieee754_float32
     from dbc_informed_socketcan_to_parquet_spark.functions.partitioning import fan_out
 
     ev = fan_out(_read(spark, sf_dir, "events"))

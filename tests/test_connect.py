@@ -58,6 +58,8 @@ GUARDED_SITES = {
     # try sparkContext.getCheckpointDir except → localCheckpoint fallback
     # (r13: reliable-checkpoint upgrade only exists on classic sessions)
     ("functions/checkpoints.py", "durable_checkpoint"),
+    # hasattr(df, "_jdf") → plain df.selectExpr (Connect batches the list)
+    ("dbc/compiler.py", "_select_sql"),
 }
 
 CLASSIC_ATTRS = {"sparkContext", "_jdf", "_jsc", "_jvm", "rdd"}

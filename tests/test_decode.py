@@ -92,6 +92,26 @@ def test_unsigned_32bit_gets_int64(spark):
     assert row.Counter == hi and row.Delta == 5
 
 
+def test_integer_column_holds_physical_range(spark):
+    """The integer column is chosen by the field's physical range: an
+    offset that pushes an s32 past int32 widens it to int64 (ANSI casts
+    would otherwise fail the job), and a u64 — which no integer column
+    holds — decodes as an unsigned double, not a wrapped negative."""
+    from dbc_informed_socketcan_to_parquet_spark.dbc.spec import MessageSpec
+
+    s32 = SignalSpec("S32", 0, 32, "little", True, 1.0, -40.0)
+    u16 = SignalSpec("U16", 32, 16, "little", False, 1.0, 100.0)
+    u64 = SignalSpec("U64", 0, 64, "little", False, 1.0, 0.0)
+    assert (s32.type_tag, u16.type_tag, u64.type_tag) == ("int64", "int32", "float64")
+    spec = DbcSpec(messages=(MessageSpec(0x200, "A", 8, (s32, u16)), MessageSpec(0x201, "B", 8, (u64,))))
+    payload = (1 << 31).to_bytes(4, "little") + b"\xff\xff\x00\x80"
+    frames = spark.createDataFrame(
+        [(1.0, 0x200, payload), (2.0, 0x201, payload)], "ts double, can_id long, data binary")
+    a, b = DecodeCompiler(spec).decode_wide(frames).orderBy("Time_ms").collect()
+    assert a.S32 == -(1 << 31) - 40 and a.U16 == 0xFFFF + 100
+    assert b.U64 == float(int.from_bytes(payload, "little"))
+
+
 @given(
     raw=st.integers(min_value=0, max_value=(1 << 12) - 1),
     torque=st.integers(min_value=-(1 << 15), max_value=(1 << 15) - 1),

@@ -77,6 +77,95 @@ def test_decode_is_shuffle_free_and_codegen(spark):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
+def _generated_dbc(n_signals: int):
+    """``n_signals`` 8-bit signals, 8 per message, alternating Intel and
+    Motorola, some signed or scaled."""
+    from dbc_informed_socketcan_to_parquet_spark.dbc.spec import DbcSpec, MessageSpec, SignalSpec
+
+    msgs = []
+    for m in range(0, n_signals, 8):
+        sigs = tuple(
+            SignalSpec(f"S{m + k}", 8 * k + (0 if k % 2 else 7), 8, "little" if k % 2 else "big",
+                       k % 3 == 0, 0.5 if k % 4 == 1 else 1.0, -1.0 if k % 4 == 1 else 0.0)
+            for k in range(min(8, n_signals - m))
+        )
+        msgs.append(MessageSpec(0x100 + m // 8, f"M{m // 8}", 8, sigs))
+    return DbcSpec(messages=tuple(msgs))
+
+
+def _candump_frames(spark):
+    from dbc_informed_socketcan_to_parquet_spark.functions.candump import parse_candump_lines
+
+    lines = spark.createDataFrame(
+        [(f"({1700000000 + i}.000000) vcan0 {0x100 + i % 4:X}#0011223344556677",) for i in range(8)],
+        "value string",
+    )
+    return parse_candump_lines(lines)
+
+
+def test_decode_wide_assembles_payload_words_once(spark):
+    """The payload words are projected once per frame, whatever the DBC
+    width: a 32-signal decode carries exactly as many ``conv(`` calls in
+    its optimized plan as a 1-signal decode (Catalyst's CollapseProject
+    does not inline the multiply-referenced word columns into each
+    signal), adds no exchange to the frames plan, and the whole decode
+    fuses into the frames' WholeStageCodegen stage."""
+    frames = _candump_frames(spark)
+
+    def optimized(n):
+        df = DecodeCompiler(_generated_dbc(n)).decode_wide(frames)
+        return df, df._jdf.queryExecution().optimizedPlan().toString()
+
+    _, one = optimized(1)
+    wide, plan32 = optimized(32)
+    assert len(wide.columns) == 33
+    assert plan32.count("conv(") == one.count("conv(")
+    assert plan32.count("rpad(hex(") == one.count("rpad(hex(")
+    assert n_exchanges(plan_of(wide)) == n_exchanges(plan_of(frames)) == 0
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        executed = DecodeCompiler(_generated_dbc(32)).decode_wide(frames)._jdf \
+            .queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # every decode node (filter + word and signal projections) is marked
+    # with the same whole-stage-codegen id
+    stages = re.findall(r"\*\((\d+)\) (?:Project|Filter)", executed)
+    assert len(stages) >= 3 and len(set(stages)) == 1, executed
+
+
+def test_decode_wide_build_round_trips_constant(spark):
+    """Building the wide decode costs a bounded number of py4j round trips,
+    independent of the signal count (a Column-algebra build paid ~500 per
+    signal)."""
+    frames = _candump_frames(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        # py4j also frees collected proxies ("m d" commands) on this
+        # channel whenever Python's GC runs; those are not build work
+        if not command.startswith("m\nd\n"):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    def build_cost(n: int) -> int:
+        calls[0] = 0
+        client.send_command = counting
+        try:
+            df = DecodeCompiler(_generated_dbc(n)).decode_wide(frames)
+        finally:
+            client.send_command = send
+        assert len(df.columns) == n + 1
+        return calls[0]
+
+    build_cost(5)  # warm the JVM class lookups both builds share
+    small, large = build_cost(5), build_cost(160)
+    assert large <= small + 5, (small, large)
+    assert large < 100, large
+
+
 def test_order_limit_no_global_sort(spark):
     plan = plan_of(EXTRA_QUERIES["order_limit"](spark, SF))
     assert "TakeOrderedAndProject" in plan
